@@ -117,11 +117,13 @@ object Bench {
     * replay ONLY — the verification read-back (its LWW shuffle is a read
     * cost, not an ingest cost) is excluded.
     *
-    * alignedDeltaWrite is on: the bench binlog is written with
-    * `shard = pmod(hash(conv_id), 64)` and the table has 64 buckets
-    * (shard == bucket exactly), so delta writes need no exchange — the
-    * production configuration of a WAL that shards by key hash. */
-  /** @param verifyCount true = LWW-read the final table and count live
+    * The bench binlog is written with `shard = pmod(hash(conv_id), 64)`
+    * and the table has 64 buckets (shard == bucket exactly), and each
+    * batch is one segment: every bucket has one (shard, seg) source, so
+    * the merge writes its deltas without an exchange — the production
+    * layout of a WAL that shards by key hash.
+    *
+    * @param verifyCount true = LWW-read the final table and count live
     *   rows (the headline bench's sanity check — a full keyed aggregation
     *   over the table, NOT part of the timed section). false = sum the
     *   manifest's per-file row counts instead (pre-LWW, dupes included) —
@@ -130,7 +132,6 @@ object Bench {
     *   of the measurement itself. */
   def replayBinlog(spark: SparkSession, binlog: String, work: String,
       cpus: Int,
-      opts: Icelite.Options = Icelite.Options(alignedDeltaWrite = true),
       verifyCount: Boolean = true): ReplayResult = {
     // bucket count is a TABLE property sized by data, not by test cores:
     // fixed 64 keeps both scaling levels on the identical table layout,
@@ -138,7 +139,7 @@ object Bench {
     // cacheBatch off: the binlog batch is parquet on tmpfs — re-scanning
     // beats materializing a row cache (flip with GRAFT_CACHE_BATCH=1)
     val cfg = Ingest.Config(s"$work/table", s"$work/ckpt", writerId = "bench",
-      buckets = 64, opts = opts,
+      buckets = 64,
       cacheBatch = sys.env.get("GRAFT_CACHE_BATCH").contains("1"))
     val all = Changelog.readBinlog(spark, binlog)
     val segs = all.select("seg").distinct().collect().map(_.getInt(0)).sorted

@@ -63,26 +63,6 @@ object Lww {
       .select((grouping.map(col) ++ payload.map(c => col(s"_w.`$c`").as(c))): _*)
   }
 
-  /** Sort-based single-shuffle bucketed LWW: same contract as
-    * [[latestBucketed]], but dedups with a window over a whole-stage-codegen
-    * radix sort instead of an object-hash aggregation. The window's
-    * partition spec (bucket, salt, keys) is satisfied by the repartition's
-    * (bucket, salt) hash partitioning, so no second exchange; and because
-    * rows leave sorted by bucket-first, the parquet dynamic-partition
-    * writer skips its own sort. Wins when the duplicate factor is low
-    * (object-hash agg pays struct allocation per row); loses slightly when
-    * most rows collapse (agg shrinks data before the sort would).
-    */
-  def latestBucketedSorted(df: DataFrame, keys: Seq[String], ordering: Seq[String],
-      bucketCol: String, saltCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy((Seq(bucketCol, saltCol) ++ keys).map(col): _*)
-      .orderBy(ordering.map(c => col(c).desc): _*)
-    df.repartition(col(bucketCol), col(saltCol))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** Window-rank formulation (`row_number() over (partition by key order by
     * ordering desc) = 1`) — reference semantics spelled the declarative way;
     * kept for property-testing equivalence with [[latest]], not for the hot

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hot-key / hot-bucket handling.
@@ -11,31 +11,13 @@ import org.apache.spark.sql.functions._
   * (`otsstreamreader/.../OTSStreamReaderMasterProxy.java:86`). In Spark the
   * analogue for a hash-bucketed write is salting: a hot bucket (one very
   * active conversation) must fan out over several tasks/files instead of
-  * serializing one fat task.
+  * serializing one fat task. The merge salts inline in its bucketed write,
+  * with slots sized from its own per-bucket stats (`IceliteTable.merge`);
+  * this object keeps the heavy-hitter sketch.
   *
   * Salting changes partitioning, never results (property-tested).
   */
 object Skew {
-
-  /** Add a `_salt` column sized per bucket: buckets whose row count exceeds
-    * `targetRowsPerTask` get `ceil(count / target)` salt slots, others 1.
-    * The per-bucket counts are a small aggregate broadcast back in.
-    * NB: computes `df` twice (counts + join) — persist upstream lineage
-    * before calling, or derive slots from stats you already have and salt
-    * inline as the merge path does (`Icelite.writeBucketed`).
-    */
-  def saltByBucket(df: DataFrame, bucketCol: String, targetRowsPerTask: Long,
-      saltOrdCols: Seq[String]): DataFrame = {
-    val counts = df.groupBy(col(bucketCol))
-      .agg(count(lit(1)).as("_cnt"))
-      .withColumn("_slots",
-        greatest(lit(1), ceil(col("_cnt") / lit(targetRowsPerTask))).cast("int"))
-      .select(col(bucketCol), col("_slots"))
-    df.join(F.broadcast(counts), Seq(bucketCol), "left")
-      .withColumn("_salt",
-        pmod(xxhash64(saltOrdCols.map(col): _*), coalesce(col("_slots"), lit(1))))
-      .drop("_slots")
-  }
 
   /** Top-N heavy hitters by key — the frequency sketch feeding salting
     * decisions and the skew report in metrics. Cheap: partial-agg'd count.

@@ -44,7 +44,7 @@ import graft.operators.Lww
   *  - compaction cost is bounded per bucket and amortized by the threshold;
   *  - the LWW reduction is an aggregation (map-side combine) so hot keys
   *    collapse before the shuffle; hot buckets are salted at write
-  *    ([[graft.operators.Skew.saltByBucket]]);
+  *    (`writeBucketed`, slots sized from the merge's own bucket stats);
   *  - file lists above [[Icelite.inlineManifestMax]] entries spill to a
   *    gzipped side manifest (Iceberg's manifest-list idea, one level):
   *    the version JSON stays O(1) and snapshot reads stay flat to
@@ -121,6 +121,18 @@ object Icelite {
       bucketsCompacted: Int,
       wallMs: Long)
 
+  /** One bucket's share of a merge batch: change rows, deletes, seq range,
+    * and `sources` — how many distinct binlog `(shard, seg)` sources its
+    * rows came from (0 = unknown: no `shard` column, or stats the merge
+    * computed itself). [[IceliteTable.merge]] plans salt slots, the
+    * compaction choice and manifest seq ranges from these, and writes its
+    * deltas without an exchange only when every delta bucket has exactly
+    * one source. */
+  case class BucketStats(rows: Long, deletes: Long, minSeq: Long, maxSeq: Long,
+      sources: Int = 0)
+
+  /** Merge and maintenance knobs. The delta write path is not one of
+    * them: the batch's layout picks it ([[BucketStats.sources]]). */
   case class Options(
       /** compact a bucket when its delta-file count would exceed this;
         * 0 = always compact = classic copy-on-write MERGE. */
@@ -132,33 +144,7 @@ object Icelite {
         * (b) no incremental consumer still needs to observe the delete:
         * [[IceliteTable.changesSince]] cannot return a tombstone that
         * compaction physically removed. */
-      dropTombstonesOnCompact: Boolean = false,
-      /** LWW-collapse each delta batch before writing it. Off by default —
-        * true merge-on-read: intra-batch duplicates are rare (an append-
-        * mostly changelog repeats few keys per micro-batch), the read and
-        * compaction paths LWW across generations anyway, and skipping the
-        * collapse removes a full wide-row SortAggregate from every ingest
-        * batch (max_by over a struct can only plan sort-based). Turn on for
-        * update-heavy streams where batches collapse substantially. */
-      dedupDeltaWrites: Boolean = false,
-      /** Zero-shuffle delta writes: skip the (bucket, salt) exchange and
-        * let each scan task `partitionBy(bkt)` its rows directly. ALWAYS
-        * correct (a dynamic-partition write does not depend on task
-        * layout); enable when the batch source is pre-sharded by
-        * `pmod(hash(conv_id), S)` with `buckets % S == 0` — our own binlog
-        * layout ([[graft.sources.Changelog.writeBinlog]]) — so each task
-        * holds ≤ buckets/S buckets and file counts stay bounded. This
-        * removes the ONE full-data exchange from the ingest hot path: at
-        * 10^10 events the WAL shards already co-locate keys, so shuffling
-        * them again to the same hash is pure wasted bandwidth. Skew also
-        * needs no salting here — a hot shard file simply splits into more
-        * scan tasks (`maxPartitionBytes`). NOTE the flip side: scan splits
-        * become THE parallelism unit, so the WAL must carry ≥ cores files
-        * per trigger and `spark.sql.files.maxPartitionBytes` /
-        * `openCostInBytes` must not pack small shard files into few fat
-        * splits. Only takes effect with `dedupDeltaWrites = false` (a
-        * collapse needs the exchange). */
-      alignedDeltaWrite: Boolean = false)
+      dropTombstonesOnCompact: Boolean = false)
 
   /** A snapshot version we tried to commit already exists — another writer
     * won the race. Callers either rebase + retry ([[IceliteTable.merge]],
@@ -553,8 +539,10 @@ class IceliteTable(val spark: SparkSession, val root: String) {
   }
 
   /** Retained snapshots as a DataFrame — Iceberg's `table$snapshots`
-    * analogue; one row per version with commit metadata and file/row
-    * totals (rows from the write-side manifest stats). */
+    * analogue; one row per version with commit metadata, file/row
+    * totals (rows from the write-side manifest stats) and the commit's
+    * `summary` map — for a merge, e.g. `buckets.compacted` and
+    * `delta.write` (`aligned` | `exchange`: the delta path it took). */
   def snapshotsDf(): DataFrame = {
     import spark.implicits._
     history()
@@ -562,9 +550,10 @@ class IceliteTable(val spark: SparkSession, val root: String) {
         s.buckets, s.currentSchemaId, s.files.size.toLong,
         // clamp unknown (-1 legacy) per-file counts like every other
         // consumer, else each legacy file SUBTRACTS one from the total
-        s.files.map(f => math.max(f.rows, 0L)).sum, s.committedAtMs))
+        s.files.map(f => math.max(f.rows, 0L)).sum, s.committedAtMs, s.summary))
       .toDF("snapshot_id", "parent_id", "writer_id", "last_batch_id",
-        "buckets", "current_schema_id", "n_files", "n_rows", "committed_at_ms")
+        "buckets", "current_schema_id", "n_files", "n_rows", "committed_at_ms",
+        "summary")
   }
 
   /** Incremental changelog read (Iceberg incremental-scan analogue): every
@@ -623,13 +612,14 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     a
   }
 
-  /** @param precomputedStats per-bucket (rows, deletes, minSeq, maxSeq)
-    *   computed by the caller in a fused aggregation (see
+  /** @param precomputedStats per-bucket [[Icelite.BucketStats]] computed
+    *   by the caller in a fused aggregation (see
     *   [[graft.streaming.Ingest.applyBatch]]) — skips the merge's own
-    *   stats pass, saving one job + one scan per micro-batch. */
+    *   stats pass, saving one job + one scan per micro-batch, and carries
+    *   the source counts that can make the delta write exchange-free. */
   def merge(batchIn: DataFrame, batchId: Long, writerId: String,
       opts: Options = Options(),
-      precomputedStats: Option[Map[Int, (Long, Long, Long, Long)]] = None): MergeStats = {
+      precomputedStats: Option[Map[Int, BucketStats]] = None): MergeStats = {
     val t0 = System.nanoTime()
     val snap = snapshot()
     if (writerId == snap.writerId && batchId <= snap.lastBatchId)
@@ -667,7 +657,8 @@ class IceliteTable(val spark: SparkSession, val root: String) {
         sum(col("_deleted").cast("long")).as("d"),
         min(col("_seq")).as("lo"),
         max(col("_seq")).as("hi")).collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+        .map(r => r.getInt(0) -> BucketStats(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toMap
     })
 
     if (stats.isEmpty) { // empty batch: metadata-only commit advances the gate
@@ -711,33 +702,40 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     // adapts downward for small batches: a "hot" bucket is one that would
     // serialize a meaningful fraction of the batch behind a single task,
     // which at high parallelism happens far below the absolute cap.
-    val totalRows = stats.values.map(_._1).sum
+    val totalRows = stats.values.map(_.rows).sum
     val adaptiveTarget = math.min(opts.targetRowsPerTask,
       math.max(totalRows / (2L * spark.sparkContext.defaultParallelism), 50000L))
     def slotsFor(n: Long): Int =
       math.max(1, math.ceil(n.toDouble / adaptiveTarget).toInt)
-    val batchSlots: Map[Int, Int] = stats.map { case (b, (n, _, _, _)) =>
-      b -> slotsFor(n)
-    }
+    val batchSlots: Map[Int, Int] = stats.map { case (b, s) => b -> slotsFor(s.rows) }
 
     // unique staging suffix: a crashed writer's abandoned `d-<id>` dir must
     // never collide with (and leak files into) a later commit that reuses
     // the same snapshot id
     val stage = java.util.UUID.randomUUID().toString.take(8)
-    if (deltaSet.nonEmpty) {
+    // Delta path, chosen by the batch's layout. When every delta bucket's
+    // rows come from ONE binlog (shard, seg) source — a WAL sharded like
+    // the table, one segment per batch — the scan task holding that source
+    // already holds the whole bucket, so `partitionBy(bkt)` straight off
+    // the scan writes the same one file per bucket as the exchange, minus
+    // the full-data shuffle. Any other layout (several shards or segments
+    // per bucket, or unknown sources) would fan a bucket over several scan
+    // tasks and files, so it takes the (bucket, salt) exchange. A source
+    // file larger than `spark.sql.files.maxPartitionBytes` still splits
+    // over several scan tasks, one file per bucket each — the aligned
+    // path's analogue of salting a hot bucket. Deltas are appended
+    // un-collapsed either way: read and compaction LWW across generations.
+    val deltaWrite =
+      if (deltaSet.isEmpty) None
+      else Some(if (deltaSet.forall(b => stats(b).sources == 1)) "aligned" else "exchange")
+    deltaWrite.foreach { path =>
       val rel = s"data/d-$nextId-$stage"
       val part = withB.filter(col(BucketCol).isInCollection(deltaSet))
       phase("delta-write", t0) {
-        if (opts.alignedDeltaWrite && !opts.dedupDeltaWrites)
-          part.write.partitionBy(BucketCol).parquet(s"$root/$rel")
-        else
-          writeBucketed(part, s"$root/$rel", batchSlots,
-            dedup = opts.dedupDeltaWrites, bloom = false)
+        if (path == "aligned") part.write.partitionBy(BucketCol).parquet(s"$root/$rel")
+        else writeBucketed(part, s"$root/$rel", batchSlots, delta = true)
       }
-      newFiles ++= phase("delta-list", t0) {
-        if (opts.dedupDeltaWrites) listStagedMeasured(rel, "delta", schemaId)
-        else listStagedFromStats(rel, "delta", schemaId, stats)
-      }
+      newFiles ++= phase("delta-list", t0) { listStagedFromStats(rel, schemaId, stats) }
     }
     if (compactSet.nonEmpty) {
       val rel = s"data/b-$nextId-$stage"
@@ -758,7 +756,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
       val oldRows: Map[Int, Long] = snap.files.filter(f => compactSet.contains(f.bucket))
         .groupBy(_.bucket).map { case (b, fs) => b -> fs.map(f => math.max(f.rows, 0L)).sum }
       val compactSlots = compactSet.map { b =>
-        val n = oldRows.getOrElse(b, 0L) + stats.get(b).map(_._1).getOrElse(0L)
+        val n = oldRows.getOrElse(b, 0L) + stats.get(b).map(_.rows).getOrElse(0L)
         b -> math.max(1, math.ceil(n.toDouble / opts.targetRowsPerTask).toInt)
       }.toMap
       phase("compact-write", t0) {
@@ -770,7 +768,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
       // winners keep their original _seq) — a late (low-seq) batch that
       // triggers compaction cannot manifest a low maxSeq over high-seq
       // rows, so changesSince's pruning never skips committed changes
-      newFiles ++= phase("compact-list", t0) { listStagedMeasured(rel, "base", schemaId) }
+      newFiles ++= phase("compact-list", t0) { listStagedMeasured(rel, schemaId) }
     }
     if (bothWrites) withB.unpersist()
 
@@ -779,8 +777,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     // (concurrently-ADDED files in the same buckets are fine — they stay,
     // and the read path LWWs across generations)
     val replaced = snap.files.filter(f => compactSet.contains(f.bucket)).map(_.path).toSet
-    val nRows = stats.values.map(_._1).sum
-    val nDel = stats.values.map(_._2).sum
+    val nDel = stats.values.map(_.deletes).sum
     // base.copy, NOT a positional construction: metadata fields this merge
     // does not own (refs, and any future additions) must carry forward
     def buildNext(base: SnapshotMeta): SnapshotMeta = base.copy(
@@ -788,10 +785,11 @@ class IceliteTable(val spark: SparkSession, val root: String) {
       writerId = writerId, lastBatchId = batchId,
       schemas = schemas, currentSchemaId = schemaId,
       files = base.files.filterNot(f => replaced.contains(f.path)) ++ newFiles,
-      summary = Map("batch.rows" -> nRows.toString,
+      summary = Map("batch.rows" -> totalRows.toString,
         "batch.deletes" -> nDel.toString,
         "buckets.touched" -> affected.size.toString,
-        "buckets.compacted" -> compactSet.size.toString),
+        "buckets.compacted" -> compactSet.size.toString) ++
+        deltaWrite.map("delta.write" -> _),
       committedAtMs = System.currentTimeMillis(),
       manifestRef = None) // writeSnapshot re-spills if the list is large
     commitWithRetry(buildNext(snap), latest =>
@@ -802,8 +800,8 @@ class IceliteTable(val spark: SparkSession, val root: String) {
         throw new CommitConflictException(
           "files compacted by this merge were concurrently rewritten; cannot rebase")
       else Some(buildNext(latest))) match {
-      case Some(next) => MergeStats(next.snapshotId, batchId, skipped = false, nRows,
-        nRows - nDel, nDel, affected.size, compactSet.size,
+      case Some(next) => MergeStats(next.snapshotId, batchId, skipped = false, totalRows,
+        totalRows - nDel, nDel, affected.size, compactSet.size,
         (System.nanoTime() - t0) / 1000000)
       case None => MergeStats(snapshot().snapshotId, batchId, skipped = true, 0, 0, 0, 0, 0, 0)
     }
@@ -1081,17 +1079,12 @@ class IceliteTable(val spark: SparkSession, val root: String) {
         .parquet(fs.map(f => s"$root/${f.path}"): _*), full)
     }.reduce(_.unionByName(_))
       .withColumn(BucketCol, bucketOf(snap.buckets))
-    val byBucket = oldFiles.groupBy(_.bucket)
-    val bucketStats: Map[Int, (Long, Long, Long, Long)] = byBucket.map {
-      case (b, fs) => b -> ((fs.map(f => math.max(f.rows, 0L)).sum, 0L,
-        fs.map(_.minSeq).filter(_ >= 0).minOption.getOrElse(-1L),
-        fs.map(_.maxSeq).max))
-    }
-    val slots = bucketStats.map { case (b, (n, _, _, _)) =>
+    val slots = oldFiles.groupBy(_.bucket).map { case (b, fs) =>
+      val n = fs.map(f => math.max(f.rows, 0L)).sum
       b -> math.max(1, math.ceil(n.toDouble / opts.targetRowsPerTask).toInt)
     }
     writeBucketed(df, s"$root/$rel", slots, dropTombstones)
-    val newFiles = listStagedMeasured(rel, "base", snap.currentSchemaId)
+    val newFiles = listStagedMeasured(rel, snap.currentSchemaId)
     // rebase keeps the winner's gate fields (base.copy) and any files it
     // added; only the exact files this compaction folded are swapped out
     val replaced = oldFiles.map(_.path).toSet
@@ -1163,7 +1156,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     // table under the old conservative global range
     val newFiles =
       if (snap.files.isEmpty) Nil
-      else listStagedMeasured(rel, "base", snap.currentSchemaId)
+      else listStagedMeasured(rel, snap.currentSchemaId)
     val replaced = snap.files.map(_.path).toSet
     def buildNext(base: SnapshotMeta): SnapshotMeta = base.copy(
       snapshotId = base.snapshotId + 1, parentId = base.snapshotId,
@@ -1288,10 +1281,11 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     * several tasks while keeping key locality; [[Lww.latestBucketed]]
     * repartitions by (bucket, salt) and aggregates in place — no second
     * exchange; `partitionBy(bkt)` lays files per bucket. Slot counts come
-    * from the merge's own bucket stats — no extra counting job. */
+    * from the merge's own bucket stats — no extra counting job.
+    * `delta = true` (the exchange delta path) only repartitions — deltas
+    * are appended un-collapsed — and writes no bloom ([[bloomKeyed]]). */
   private def writeBucketed(df: DataFrame, absDir: String, slots: Map[Int, Int],
-      dropTombstones: Boolean = false, dedup: Boolean = true,
-      bloom: Boolean = true): Unit = {
+      dropTombstones: Boolean = false, delta: Boolean = false): Unit = {
     val hot = slots.filter(_._2 > 1)
     // IMPORTANT: the salt must stay a non-foldable expression even in the
     // no-hot-bucket case. A literal 0 constant-folds out of the grouping,
@@ -1309,20 +1303,15 @@ class IceliteTable(val spark: SparkSession, val root: String) {
           coalesce(element_at(slotMap, col(BucketCol)), lit(1))).cast("int")
       }
     val salted = df.withColumn("_ksalt", saltExpr)
-    // max_by(struct) agg measured ~1.2-1.5× faster than the sort+window
+    // max_by(struct) agg measured ~1.2-1.5× faster than a sort+window
     // formulation at 10^7 events on both 8 and 32 cores
     val deduped =
-      if (!dedup)
-        salted.repartition(col(BucketCol), col("_ksalt"))
-      else if (sys.env.get("GRAFT_LWW_IMPL").contains("sort"))
-        Lww.latestBucketedSorted(salted, Model.keyCols, Seq("_event_ts", "_seq"),
-          BucketCol, "_ksalt")
-      else
-        Lww.latestBucketed(salted, Model.keyCols, Seq("_event_ts", "_seq"),
-          BucketCol, "_ksalt")
+      if (delta) salted.repartition(col(BucketCol), col("_ksalt"))
+      else Lww.latestBucketed(salted, Model.keyCols, Seq("_event_ts", "_seq"),
+        BucketCol, "_ksalt")
     val out = if (dropTombstones) deduped.filter(!col("_deleted")) else deduped
     val w = out.drop("_ksalt").write
-    (if (bloom) bloomKeyed(w) else w)
+    (if (delta) w else bloomKeyed(w))
       .partitionBy(BucketCol).parquet(absDir)
   }
 
@@ -1376,19 +1365,19 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     * across its part files: per-bucket TOTALS are exact, which is all any
     * consumer uses (slot sizing, rebucket estimates, summaries — they sum
     * per bucket); per-file splits are approximate and documented so. */
-  private def listStagedFromStats(relDir: String, kind: String, schemaId: Int,
-      stats: Map[Int, (Long, Long, Long, Long)]): List[DataFileMeta] =
+  private def listStagedFromStats(relDir: String, schemaId: Int,
+      stats: Map[Int, BucketStats]): List[DataFileMeta] =
     stagedPaths(relDir).groupBy(_._2).toList.flatMap { case (b, fs) =>
-      val (n, _, lo, hi) = stats.getOrElse(b, (0L, 0L, -1L, -1L))
-      val k = fs.size
+      val s = stats.getOrElse(b, BucketStats(0L, 0L, -1L, -1L))
+      val (n, k) = (s.rows, fs.size)
       fs.map(_._1).sorted.zipWithIndex.map { case (path, i) =>
         val share = n / k + (if (i < n % k) 1L else 0L)
-        DataFileMeta(path, b, kind, share, schemaId, lo, hi)
+        DataFileMeta(path, b, "delta", share, schemaId, s.minSeq, s.maxSeq)
       }
     }
 
-  /** Manifest entries for a COLLAPSING staged write (LWW dedup and/or
-    * tombstone drop — written rows ≠ input rows): ONE executor-side Spark
+  /** Manifest entries for a COLLAPSING staged base write (LWW dedup
+    * and/or tombstone drop — written rows ≠ input rows): ONE executor-side Spark
     * job over the staged files computes exact per-FILE rows and seq
     * ranges (`input_file_name()` grouping; column-pruned to `_seq`, page-
     * cache warm — the files were just written). Exact per-file ranges are
@@ -1398,8 +1387,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
     * to files that genuinely carry newer winners (round-2 verdict item 3).
     * Ranges reflect SURVIVING rows, which is exactly the set an
     * incremental read can still emit — pruning stays sound. */
-  private def listStagedMeasured(relDir: String, kind: String,
-      schemaId: Int): List[DataFileMeta] = {
+  private def listStagedMeasured(relDir: String, schemaId: Int): List[DataFileMeta] = {
     // a fully-collapsing write (e.g. dropTombstones over all-tombstone
     // buckets) stages no files at all — nothing to measure or manifest
     val staged = stagedPaths(relDir)
@@ -1431,7 +1419,7 @@ class IceliteTable(val spark: SparkSession, val root: String) {
       val rel = fileQ.stripPrefix(rootQ + "/")
       DataFileMeta(rel,
         bucketByPath.getOrElse(rel, r.getInt(1)),
-        kind, r.getLong(2), schemaId, r.getLong(3), r.getLong(4))
+        "base", r.getLong(2), schemaId, r.getLong(3), r.getLong(4))
     }
   }
 }

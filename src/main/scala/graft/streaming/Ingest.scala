@@ -235,28 +235,31 @@ object Ingest {
       val hasShard = batch.columns.contains("shard")
       // ONE fused aggregation computes both the per-shard offset ranges
       // (lineage) and the per-bucket stats the merge needs (salt slots,
-      // compaction choice, manifest seq ranges): group by (shard, bucket),
-      // collect the tiny cross product, roll both views up on the driver.
+      // compaction choice, manifest seq ranges, and how many binlog
+      // (shard, seg) sources feed each bucket — which picks the delta
+      // write path): group by (shard, seg, bucket), collect the tiny cross
+      // product, roll both views up on the driver.
       val buckets = table.snapshot().buckets
-      val bexpr = Icelite.bucketOf(buckets).as("_b")
-      // coalesce: shard is nullable in binlogSchema; a null-shard row must
-      // not NPE the driver-side rollup (it lands in the -1 catch-all)
-      val groupCols = (if (hasShard) Seq(coalesce(col("shard"), lit(-1)).as("shard"))
-        else Seq(lit(-1).as("shard"))) :+ bexpr
-      val fused = batch.groupBy(groupCols: _*).agg(
-        count(lit(1)).as("n"),
-        count_if(col("op") === lit("D")).as("d"),
-        min(col("seq")).as("lo"),
-        max(col("seq")).as("hi")).collect()
-      val bucketStats: Map[Int, (Long, Long, Long, Long)] = fused
-        .groupBy(_.getInt(1)).map { case (b, rs) =>
-          b -> ((rs.map(_.getLong(2)).sum, rs.map(_.getLong(3)).sum,
-            rs.map(_.getLong(4)).min, rs.map(_.getLong(5)).max))
+      def meta(c: String) = // coalesce: shard/seg are nullable in binlogSchema
+        (if (batch.columns.contains(c)) coalesce(col(c), lit(-1)) else lit(-1)).as(c)
+      val fused = batch.groupBy(meta("shard"), meta("seg"), Icelite.bucketOf(buckets).as("_b"))
+        .agg(
+          count(lit(1)).as("n"),
+          count_if(col("op") === lit("D")).as("d"),
+          min(col("seq")).as("lo"),
+          max(col("seq")).as("hi")).collect()
+      val bucketStats: Map[Int, Icelite.BucketStats] = fused
+        .groupBy(_.getInt(2)).map { case (b, rs) =>
+          // one row per (shard, seg) source of this bucket; a null shard
+          // (-1) is an unknown source
+          val sources = if (!hasShard || rs.exists(_.getInt(0) < 0)) 0 else rs.length
+          b -> Icelite.BucketStats(rs.map(_.getLong(3)).sum, rs.map(_.getLong(4)).sum,
+            rs.map(_.getLong(5)).min, rs.map(_.getLong(6)).max, sources)
         }
       val shardStats: Seq[(Int, Long, Long, Long)] =
         if (hasShard)
           fused.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (s, rs) =>
-            (s, rs.map(_.getLong(2)).sum, rs.map(_.getLong(4)).min, rs.map(_.getLong(5)).max)
+            (s, rs.map(_.getLong(3)).sum, rs.map(_.getLong(5)).min, rs.map(_.getLong(6)).max)
           }
         else Seq.empty
       val stats0 = table.merge(batch.drop(sourceMeta: _*), batchId, cfg.writerId, cfg.opts,

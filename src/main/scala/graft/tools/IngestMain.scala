@@ -52,7 +52,9 @@ import graft.streaming.Ingest
   *   dir, which holds a different source's offsets
   *   mode=delete|update — engine-side DML (no binlog):
   *   predicate=<sql boolean expr> selects live rows;
-  *   update adds set="col=expr[,col=expr...]";
+  *   update adds set="col=expr[,col=expr...]" (split on top-level
+  *   commas only, so `set=tool=concat(role,'-x'),text=upper(text)` is two
+  *   assignments);
   *   dmlBatchId=<n> is the idempotence key (reruns with the same id are
   *   no-ops under the (writerId, batchId) gate)
   *   mode=files|snapshots [limit=<n>] — print the metadata tables
@@ -61,9 +63,10 @@ import graft.streaming.Ingest
   *   maxFilesPerTrigger=<n> deadLetterDir=<dir> errorPctLimit=<0..1>
   *   errorRecordLimit=<n> metricsDir=<dir> stallTimeoutMs=<ms> (hang
   *   monitor: fail the job if a trigger stops making progress)
-  *   dryRun=true compactThreshold=<n> dedupDeltaWrites=true
-  *   alignedDeltaWrite=true (zero-shuffle delta writes — set when the
-  *   binlog shard count divides the bucket count)
+  *   dryRun=true compactThreshold=<n> (no delta-write key: a batch whose
+  *   buckets each read one binlog (shard, seg) — shards == buckets, one
+  *   segment per batch — writes its deltas with no exchange, any other
+  *   layout through the salted (bucket, salt) exchange)
   *   transforms=<chain> — named transform chain applied per micro-batch
   *   before the gate/merge, e.g. transforms=dx_substr(text,0,80),
   *   dx_filter(role,like,user.*) — resolved via
@@ -100,9 +103,7 @@ object IngestMain {
       writerId = kv.getOrElse("writerId", "cli"),
       buckets = kv.getOrElse("buckets", "32").toInt,
       opts = Icelite.Options(
-        compactThreshold = kv.getOrElse("compactThreshold", "8").toInt,
-        dedupDeltaWrites = kv.getOrElse("dedupDeltaWrites", "false").toBoolean,
-        alignedDeltaWrite = kv.getOrElse("alignedDeltaWrite", "false").toBoolean),
+        compactThreshold = kv.getOrElse("compactThreshold", "8").toInt),
       maxFilesPerTrigger = kv.getOrElse("maxFilesPerTrigger", "8").toInt,
       deadLetterDir = kv.get("deadLetterDir"),
       errorPctLimit = kv.getOrElse("errorPctLimit", "1.0").toDouble,
@@ -131,12 +132,6 @@ object IngestMain {
   /** modes that read no binlog dir (maintenance + non-binlog sources) */
   private val NoBinlogModes = MaintenanceModes ++ Set("shards", "kafka", "feed")
 
-  /** Build the S10 consume source config from CLI args — the executable
-    * pipeline itself lives in [[graft.sources.KafkaIo]] (capability-
-    * detected: offline it fails fast with the actionable connector-jar
-    * fix; on a cluster it builds the real `readStream.format("kafka")`).
-    * The option assembly is pure data so specs pin the exact wiring —
-    * subscribe, startingOffsets, maxOffsetsPerTrigger — without a broker. */
   /** Shared trigger parsing for the long-running modes: default =
     * ProcessingTime(intervalMs, 2000 ms); `trigger=availableNow` = drain
     * what exists and stop (backfills / smoke runs). */
@@ -146,6 +141,12 @@ object IngestMain {
     else org.apache.spark.sql.streaming.Trigger.ProcessingTime(
       kv.getOrElse("intervalMs", "2000").toLong)
 
+  /** Build the S10 consume source config from CLI args — the executable
+    * pipeline itself lives in [[graft.sources.KafkaIo]] (capability-
+    * detected: offline it fails fast with the actionable connector-jar
+    * fix; on a cluster it builds the real `readStream.format("kafka")`).
+    * The option assembly is pure data so specs pin the exact wiring —
+    * subscribe, startingOffsets, maxOffsetsPerTrigger — without a broker. */
   def kafkaSourceConfig(kv: Map[String, String]): graft.sources.KafkaIo.SourceConfig = {
     def req(k: String) = kv.getOrElse(k,
       throw new IllegalArgumentException(s"mode=kafka needs $k=<value>"))
@@ -163,6 +164,40 @@ object IngestMain {
       kv.getOrElse("kafkaParse", "split"),
       kv.getOrElse("kafkaDelimiter", "\u0001"),
       kv.getOrElse("kafkaPattern", ""))
+
+  /** `mode=update` `set=` spec → (column, SQL expression) pairs, split on
+    * top-level commas only: a comma inside parentheses or a quoted
+    * literal belongs to its expression, so
+    * `tool=concat(role,'-x'),text=upper(text)` is two assignments. */
+  def setAssignments(spec: String): Seq[(String, String)] = {
+    val parts = scala.collection.mutable.ListBuffer.empty[String]
+    var depth = 0
+    var quote = Option.empty[Char]
+    var start = 0
+    var i = 0
+    while (i < spec.length) {
+      val c = spec(i)
+      quote match {
+        case Some(_) if c == '\\' => i += 1 // escaped char inside a literal
+        case Some(q) => if (c == q) quote = None
+        case None => c match {
+          case '\'' | '"' | '`' => quote = Some(c)
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 0 => parts += spec.substring(start, i); start = i + 1
+          case _ =>
+        }
+      }
+      i += 1
+    }
+    require(depth == 0 && quote.isEmpty, s"set has unbalanced parentheses or quotes: '$spec'")
+    parts += spec.substring(start)
+    parts.map(_.trim).filter(_.nonEmpty).map { a =>
+      val eq = a.indexOf('=')
+      require(eq > 0, s"set expects col=expr, got '$a'")
+      a.substring(0, eq).trim -> a.substring(eq + 1).trim
+    }.toSeq
+  }
 
   def main(args: Array[String]): Unit = {
     val kv = parse(args)
@@ -217,8 +252,7 @@ object IngestMain {
         case "delete" | "update" =>
           // engine-side DML over a live table (no binlog): predicate is a
           // SQL boolean expression over payload columns; update also takes
-          // set="col=expr[,col=expr...]" (split on top-level commas only —
-          // expressions containing commas need one assignment per set=)
+          // set="col=expr[,col=expr...]" ([[setAssignments]])
           val pred = org.apache.spark.sql.functions.expr(kv.getOrElse("predicate",
             throw new IllegalArgumentException(
               s"mode=$mode needs predicate=<sql boolean expr>")))
@@ -231,14 +265,9 @@ object IngestMain {
           val stats =
             if (mode == "delete") table.deleteWhere(pred, batchId, cfg.writerId)
             else {
-              val sets = kv.getOrElse("set", throw new IllegalArgumentException(
-                  "mode=update needs set=<col=expr[,col=expr...]>"))
-                .split(",").map(_.trim).filter(_.nonEmpty).map { a =>
-                  val i = a.indexOf('=')
-                  require(i > 0, s"set expects col=expr, got '$a'")
-                  a.substring(0, i).trim ->
-                    org.apache.spark.sql.functions.expr(a.substring(i + 1).trim)
-                }.toMap
+              val sets = setAssignments(kv.getOrElse("set", throw new IllegalArgumentException(
+                  "mode=update needs set=<col=expr[,col=expr...]>")))
+                .map { case (c, e) => c -> org.apache.spark.sql.functions.expr(e) }.toMap
               table.updateWhere(pred, sets, batchId, cfg.writerId)
             }
           println(s"[ingest] $mode: snapshot=${stats.snapshotId} " +

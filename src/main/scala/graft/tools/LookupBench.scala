@@ -37,7 +37,7 @@ object LookupBench {
         writerId = "lookup-bench", buckets = 16,
         // low threshold: frequent compaction → lookups face the realistic
         // mixed layout of bloom-carrying bases + recent bloom-less deltas
-        opts = Icelite.Options(compactThreshold = 2, alignedDeltaWrite = true))
+        opts = Icelite.Options(compactThreshold = 2))
       val all = Changelog.readBinlog(spark, binlog)
       val segs = all.select("seg").distinct().collect().map(_.getInt(0)).sorted
       Ingest.replay(spark, cfg, segs.toSeq.map(sg =>

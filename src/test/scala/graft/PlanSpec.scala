@@ -8,9 +8,10 @@ import graft.operators.{Lww, Skew}
 /** Physical-plan assertions — the scale contract, checked structurally:
   * filters/projections reach the parquet scan, the bucketed-write dedup
   * plans exactly one exchange, aggregations get map-side partial combine,
-  * and the salt-map join broadcasts. A plan regression here is a 100-TB
-  * performance bug even when results stay correct (e.g. the constant-
-  * folded salt that silently added a second exchange and 32× the files).
+  * and a shard-aligned binlog writes its deltas without an exchange. A
+  * plan regression here is a 100-TB performance bug even when results
+  * stay correct (e.g. the constant-folded salt that silently added a
+  * second exchange and 32× the files).
   */
 class PlanSpec extends SparkSpec {
   import spark.implicits._
@@ -94,42 +95,38 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), s"no top-k operator:\n$plan")
   }
 
-  test("salt-map join broadcasts the per-bucket slot table") {
-    val df = spark.range(100000)
-      .select(pmod(hash($"id"), lit(16)).cast("int").as("bkt"), $"id".as("seq"))
-    val salted = Skew.saltByBucket(df, "bkt", 1000, Seq("seq"))
-    val plan = executed(salted)
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"salt map not broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"salt join shuffled:\n$plan")
-  }
-
   test("aligned delta write: near-zero shuffle, identical final state") {
     import graft.plans.Icelite
     import graft.sources.{Changelog, Gen}
     import graft.streaming.Ingest
     val root = tmpDir("aligned")
     val ch = Gen.changelog(spark, Gen.GenConfig(events = 5000, convs = 50, hotPct = 20))
-    Changelog.writeBinlog(ch, s"$root/binlog", shards = 4, segSize = 2500)
-    val all = Changelog.readBinlog(spark, s"$root/binlog")
-    val segs = all.select("seg").distinct().collect().map(_.getInt(0)).sorted.toSeq
-    def run(tag: String, opts: Icelite.Options): (Long, DataFrame) = {
+    // the binlog layout picks the delta path: over 8 buckets a 4-shard
+    // binlog gives every bucket one shard (8 % 4 = 0) and, one segment per
+    // batch, one source → aligned; 3 shards mix in every bucket → exchange
+    def run(shards: Int): (Long, DataFrame, Set[String]) = {
+      val binlog = s"$root/binlog-$shards"
+      Changelog.writeBinlog(ch, binlog, shards = shards, segSize = 2500)
+      val all = Changelog.readBinlog(spark, binlog)
+      val segs = all.select("seg").distinct().collect().map(_.getInt(0)).sorted.toSeq
+      val cfg = Ingest.Config(s"$root/s$shards/t", s"$root/s$shards/ck", s"s$shards",
+        buckets = 8)
       val tally = new Bench.ShuffleTally
       spark.sparkContext.addSparkListener(tally)
-      val cfg = Ingest.Config(s"$root/$tag/t", s"$root/$tag/ck", tag,
-        buckets = 8, opts = opts) // 8 buckets over 4 shards: aligned (8 % 4 = 0)
       Ingest.replay(spark, cfg, segs.map(sg => all.filter(col("seg") === sg)))
       Thread.sleep(1000) // listener bus drains async
       spark.sparkContext.removeSparkListener(tally)
-      (tally.shuffleWrite.get, Icelite.load(spark, cfg.tablePath).read())
+      val t = Icelite.load(spark, cfg.tablePath)
+      (tally.shuffleWrite.get, t.read(), t.history().flatMap(_.summary.get("delta.write")).toSet)
     }
-    val (alignedBytes, alignedDf) = run("al", Icelite.Options(alignedDeltaWrite = true))
-    val (saltedBytes, saltedDf) = run("sa", Icelite.Options())
+    val (alignedBytes, alignedDf, alignedPaths) = run(4)
+    val (saltedBytes, saltedDf, saltedPaths) = run(3)
+    assert(alignedPaths === Set("aligned") && saltedPaths === Set("exchange"))
     val cols = alignedDf.columns.sorted.map(col).toSeq
     assert(alignedDf.select(cols: _*).exceptAll(saltedDf.select(cols: _*)).isEmpty)
     assert(saltedDf.select(cols: _*).exceptAll(alignedDf.select(cols: _*)).isEmpty)
     // the salted path shuffles every row to its (bucket, salt); the aligned
-    // path shuffles only the tiny per-(shard, bucket) stats aggregate
+    // path shuffles only the tiny per-(shard, seg, bucket) stats aggregate
     assert(alignedBytes < saltedBytes / 5,
       s"aligned=$alignedBytes salted=$saltedBytes")
   }

@@ -109,29 +109,26 @@ class PropertySpec extends SparkSpec {
     assert(states.head === oracle(events))
   }
 
-  test("dedupDeltaWrites on/off produce identical tables") {
-    val events = randomEvents(new Random(31), 300)
-    val df = spark.createDataset(events).toDF()
-    val batches = (0 until 4).map(i => df.filter($"seq" % 4 === i))
-    val states = Seq(true, false).map { dd =>
-      val r = tmpDir(s"prop-dd$dd")
-      Ingest.replay(spark, Ingest.Config(s"$r/t", s"$r/c", s"w$dd", buckets = 4,
-        opts = Icelite.Options(dedupDeltaWrites = dd)), batches)
-      state(Icelite.load(spark, s"$r/t").read())
-    }
-    assert(states.distinct.size === 1 && states.head === oracle(events))
-  }
-
-  test("alignedDeltaWrite on/off produce identical tables for 3 seeds") {
+  test("delta write path invariance: aligned and exchange layouts agree for 3 seeds") {
     for (seed <- Seq(41, 42, 43)) {
       val events = randomEvents(new Random(seed), 300)
       val df = spark.createDataset(events).toDF()
-      val batches = (0 until 4).map(i => df.filter($"seq" % 4 === i))
-      val states = Seq(true, false).map { al =>
-        val r = tmpDir(s"prop-al$seed-$al")
-        Ingest.replay(spark, Ingest.Config(s"$r/t", s"$r/c", s"w$al", buckets = 4,
-          opts = Icelite.Options(alignedDeltaWrite = al)), batches)
-        state(Icelite.load(spark, s"$r/t").read())
+      // shard by the table's own bucket function, one seg per batch: every
+      // bucket reads one (shard, seg) source → aligned. Shard by seq: each
+      // bucket reads several shards → exchange.
+      val layouts = Seq(
+        "aligned" -> Icelite.bucketOf(4),
+        "exchange" -> pmod($"seq", lit(3L)).cast("int"))
+      val states = layouts.map { case (path, shard) =>
+        val r = tmpDir(s"prop-$path$seed")
+        val batches = (0 until 4).map(i => df.filter($"seq" % 4 === i)
+          .withColumn("shard", shard).withColumn("seg", lit(i)))
+        Ingest.replay(spark, Ingest.Config(s"$r/t", s"$r/c", s"w-$path", buckets = 4),
+          batches)
+        val t = Icelite.load(spark, s"$r/t")
+        assert(t.history().flatMap(_.summary.get("delta.write")).toSet === Set(path),
+          s"seed $seed: $path layout took another path")
+        state(t.read())
       }
       assert(states.distinct.size === 1 && states.head === oracle(events),
         s"seed $seed diverged")

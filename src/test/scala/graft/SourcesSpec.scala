@@ -451,17 +451,28 @@ class SourcesSpec extends SparkSpec {
     import graft.tools.IngestMain
     val kv = IngestMain.parse(Array(
       "binlog=/b", "table=/t", "checkpoint=/c", "buckets=64",
-      "deadLetterDir=/dl", "errorPctLimit=0.25", "dedupDeltaWrites=true",
+      "deadLetterDir=/dl", "errorPctLimit=0.25",
       "note=a=b")) // values may contain '='
     assert(kv("note") === "a=b")
     val cfg = IngestMain.configFrom(kv)
     assert(cfg.tablePath === "/t" && cfg.buckets === 64)
     assert(cfg.deadLetterDir === Some("/dl") && cfg.errorPctLimit === 0.25)
-    assert(cfg.opts.dedupDeltaWrites)
     intercept[IllegalArgumentException] {
       IngestMain.configFrom(Map("table" -> "/t")) // checkpoint missing
     }
     intercept[IllegalArgumentException] { IngestMain.parse(Array("novalue")) }
+  }
+
+  test("IngestMain update set= splits on top-level commas only") {
+    import graft.tools.IngestMain
+    val set = IngestMain.parse(Array("set=tool=concat(role,'-x'),text=upper(text)"))("set")
+    assert(IngestMain.setAssignments(set) ===
+      Seq("tool" -> "concat(role,'-x')", "text" -> "upper(text)"))
+    // commas inside quoted literals (an escaped quote included) stay put
+    assert(IngestMain.setAssignments("""text='a,b', tool="it\"s,x"""") ===
+      Seq("text" -> "'a,b'", "tool" -> """"it\"s,x""""))
+    intercept[IllegalArgumentException] { IngestMain.setAssignments("text=upper(text") }
+    intercept[IllegalArgumentException] { IngestMain.setAssignments("upper(text)") }
   }
 
   // ------------------------------------------------------------ masking

@@ -68,6 +68,39 @@ class StreamingSpec extends SparkSpec {
       lin.select("batch_id").distinct().count())
   }
 
+  test("delta write path follows the batch layout: aligned only for one source per bucket") {
+    val ch = Gen.changelog(spark, Gen.GenConfig(events = 3000, convs = 400, maxTurns = 8))
+      .cache()
+    /** Replays `batches` onto a fresh table; returns the recorded paths. */
+    def replay(tag: String, buckets: Int, batches: Seq[org.apache.spark.sql.DataFrame]) = {
+      val root = tmpDir(s"dw-$tag")
+      val cfg = Ingest.Config(s"$root/t", s"$root/c", s"w-$tag", buckets = buckets)
+      Ingest.replay(spark, cfg, batches)
+      val table = Icelite.load(spark, cfg.tablePath)
+      assert(diffEmpty(table.read(), Gen.expectedFinalState(ch)), tag)
+      table.history().flatMap(_.summary.get("delta.write")).toSet
+    }
+    /** Binlog with `shards` shards and 500-event segments, `segsPerBatch`
+      * segments per batch. */
+    def binlogBatches(shards: Int, segsPerBatch: Int) = {
+      val dir = tmpDir(s"dw-binlog-$shards")
+      Changelog.writeBinlog(ch, dir, shards = shards, segSize = 500)
+      val all = Changelog.readBinlog(spark, dir)
+      (0 until 6 by segsPerBatch).map(j =>
+        all.filter(col("seg") >= j && col("seg") < j + segsPerBatch))
+    }
+    // shards == buckets, one segment per batch: each bucket reads one file
+    assert(replay("aligned", 4, binlogBatches(4, 1)) === Set("aligned"))
+    // the tail's layout: one shard, several segments per batch
+    assert(replay("1shard", 4, binlogBatches(1, 3)) === Set("exchange"))
+    // shards do not divide buckets: every bucket mixes shards
+    assert(replay("25on32", 32, binlogBatches(25, 1)) === Set("exchange"))
+    // no shard column: the source layout is unknown
+    assert(replay("noshard", 4,
+      (0 until 6).map(j => ch.filter(col("seq") >= j * 500 && col("seq") < (j + 1) * 500)))
+      === Set("exchange"))
+  }
+
   test("kill-and-resume: second run picks up only the remaining segments") {
     val root = tmpDir("st2")
     val ch = gen(2000).cache()
